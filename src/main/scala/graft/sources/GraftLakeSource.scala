@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   * Implemented as a DataSource V1 `Source` (the Delta-source
   * technique) rather than a DSv2 `MicroBatchStream`, for the same
   * reason the batch façade delegates to a resolution rule: `getBatch`
-  * returns the library's OWN read plan (semi-join-pruned scan over
+  * returns the library's OWN read plan (keep-set-pruned scan over
   * exactly the window's registered files) re-flagged streaming, so
   * there is ONE read path — a DSv2 stream would force a second,
   * drift-prone implementation of partition readers behind the Scan

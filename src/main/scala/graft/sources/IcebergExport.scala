@@ -1760,7 +1760,7 @@ object IcebergExport {
     * independent read path that trusts only the Iceberg chain
     * ([[resolveChain]]'s walk), exactly what a FileSystem-catalog
     * Iceberg client does. The resolved file set feeds the same
-    * root-scan + broadcast-semi-join shape as [[LogSync.table]]
+    * keep-set-pruned root scan as [[LogSync.table]]
     * (partition columns and pruning intact); metadata resolution is
     * control-plane (a few Avro files + one JSON).
     *

@@ -71,8 +71,10 @@ object LakeDml {
     // the scan shares [[LogSync.scanRoot]]'s layout-flip fallback:
     // DML on a multi-generation root resolves each generation under
     // its own directory shape, `_metadata` identities (and the
-    // position-delete identity pair) materialized per generation
-    val withMeta = LogSync.scanRoot(spark, root,
+    // position-delete identity pair) materialized per generation —
+    // and the read path's keep-set shape ([[LogSync.sizedKeepSet]]),
+    // so unregistered and tombstoned files are never opened
+    val scan = LogSync.scanRoot(spark, root,
       reader = p => evo match {
         case Some(st) => spark.read.option("basePath", root)
           .schema(graft.sources.LakeEvolve.requestSchema(spark, root, st))
@@ -93,7 +95,8 @@ object LakeDml {
         else m
       },
       evolved = evo.isDefined)
-    val posReady = evo match {
+    val withMeta = LogSync.sizedKeepSet(spark, root, scan, paths)
+    val kept = evo match {
       case Some(st) =>
         val m = if (entries.exists(!_.isEq))
           withMeta.withColumn("__pos", col("_metadata.row_index"))
@@ -101,9 +104,6 @@ object LakeDml {
         graft.sources.LakeEvolve.project(m, st)
       case None => withMeta
     }
-    val kept = posReady
-      .join(LogSync.sizedKeepSet(spark, root, paths),
-        col("__src") === col("__registered_path"), "left_semi")
     // rows already MOR-deleted (position OR equality) must be
     // invisible to DML decisions: a CoW rewrite that scanned them
     // would RESURRECT them in the complement, and a MOR delete would

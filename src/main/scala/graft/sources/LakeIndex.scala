@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-level bloom index for point lookups on a high-cardinality
@@ -14,11 +14,13 @@ import org.apache.spark.sql.functions._
   * stored as a parquet sidecar under `<root>/_index/<column>`
   * (underscore prefix: invisible to data scans, ignored by
   * [[LogCompact]] maintenance). A lookup probes the sidecar — one row
-  * per FILE, not per data row — and scans only the files whose bloom
-  * might contain a wanted key. At 100 TB the sidecar is MBs for
-  * millions of files, the probe is a metadata-sized job, and the data
-  * scan touches ~the files that actually hold the key (plus the bloom's
-  * ~1% false-positive files), instead of the whole lake.
+  * per FILE, not per data row — and the survivors become the keep-set
+  * of the shared lake read (LogSync.tableForPaths), which opens only
+  * them. At 100 TB the sidecar is MBs for millions of files; while the
+  * manifest and sidecar are driver-resident (LogSync.servedRegistry)
+  * the probe runs on the driver with no job, and the data scan touches
+  * ~the files that actually hold the key (plus the bloom's ~1%
+  * false-positive files), instead of the whole lake.
   *
   * Soundness: a file with no index entry (registered after the last
   * [[build]]) always survives pruning, and the row-level filter applies
@@ -100,14 +102,36 @@ object LakeIndex {
     col("bloom").isNull ||
       call_function("graft_bloom_any", col("bloom"), array(values.map(xxhash64(_)): _*))
 
+  /** Registered files LEFT JOIN sidecar `idxName`'s (path, bloom)
+    * rows, filtered by `keep`: the keep-set of a lookup or grep and
+    * the relation its prune count counts. While both registries are
+    * driver-resident (LogSync.servedRegistry) the join runs on the
+    * driver and yields a local relation, whose `keep` filter Catalyst
+    * evaluates while optimizing — resolving the keep-set runs no job.
+    * Past the registry byte cap it is the distributed join.
+    */
+  private def probe(spark: SparkSession, root: String, idxName: String,
+                    keep: Column): DataFrame = {
+    val manifest = LogSync.registeredDataPaths(spark, root)
+    val idx = LogSync.servedRegistry(spark, indexPath(root, idxName))(
+      spark.read.parquet(indexPath(root, idxName))).select(col("path"), col("bloom"))
+    val joined = (LogSync.driverRows(manifest), LogSync.driverRows(idx)) match {
+      case (Some(files), Some(blooms)) =>
+        val byPath = blooms.groupBy(_.getString(0))
+        val rows = files.toSeq.flatMap { f =>
+          byPath.get(f.getString(0)).map(_.toSeq).getOrElse(Seq(Row(f.getString(0), null)))
+        }
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), idx.schema)
+      case _ => manifest.join(idx, Seq("path"), "left")
+    }
+    joined.filter(keep)
+  }
+
   private def keepPaths(spark: SparkSession, root: String, column: String,
                         values: Seq[Column]): DataFrame = {
     require(hasIndex(spark, root, column),
       s"no $column index under $root — run LakeIndex.build first")
-    val manifest = LogSync.registeredDataPaths(spark, root)
-    val idx = LogSync.servedRegistry(spark, indexPath(root, column))(
-      spark.read.parquet(indexPath(root, column)))
-    manifest.join(idx, Seq("path"), "left").filter(bloomKeep(values))
+    probe(spark, root, column, bloomKeep(values))
   }
 
   /** The GENERIC per-column handle: ensure `column`'s sidecar covers
@@ -128,7 +152,7 @@ object LakeIndex {
   }
 
   /** Registered rows whose `column` is one of `values` (literals),
-    * scanning only the files whose bloom might contain one of them —
+    * opening only the files whose bloom might contain one of them —
     * unindexed files are kept (soundness), and the row filter applies
     * on top, so this equals `LogSync.table(...).filter(column isin
     * values)` exactly, just cheaper.
@@ -208,71 +232,29 @@ object LakeIndex {
                            terms: Seq[String]): DataFrame = {
     require(hasIndex(spark, root, tokIdxName(column)),
       s"no token index on $column under $root — run LakeIndex.buildTokens first")
-    val manifest = LogSync.registeredDataPaths(spark, root)
-    val idx = LogSync.servedRegistry(spark, indexPath(root, tokIdxName(column)))(
-      spark.read.parquet(indexPath(root, tokIdxName(column))))
-    val keep = terms
-      .map(t => col("bloom").isNull ||
-        call_function("graft_bloom_any", col("bloom"), array(xxhash64(lit(t)))))
-      .reduce(_ && _)
-    manifest.join(idx, Seq("path"), "left").filter(keep)
+    probe(spark, root, tokIdxName(column),
+      terms.map(t => bloomKeep(Seq(lit(t)))).reduce(_ && _))
   }
 
   /** Registered rows whose `column` contains ALL `terms` as tokens,
-    * scanning only bloom-positive (or unindexed) files. Equals
+    * opening only bloom-positive (or unindexed) files. Equals
     * `LogSync.table(root).filter(every term ∈ tokensOf(column))`
     * exactly — the index only skips files it has positive knowledge
-    * about, and the row-level token predicate applies on top.
+    * about, and the row-level token predicate applies on top. Same
+    * shared keep-set read as [[lookup]]: MOR deletes apply, and on an
+    * evolved lake so does the alias fold (grep by the renamed column
+    * matches pre-rename files).
     */
   def grep(spark: SparkSession, root: String, column: String,
            terms: Seq[String]): DataFrame = {
-    import spark.implicits._
     val norm = terms.map(_.toLowerCase(java.util.Locale.ROOT)).distinct
     require(norm.nonEmpty && norm.forall(_.matches("[a-z0-9]+")),
       s"grep terms must be non-empty [a-z0-9]+ tokens, got $terms")
-    // Unlike [[lookup]] (whose literal isin prunes row groups via
-    // parquet stats even on a full-lake listing), the token predicate
-    // cannot push down — so the survivor PATHS feed the reader
-    // directly and skipped files are never opened. The collect is a
-    // file-count-sized control-plane crossing, the same bound as
-    // [[build]]'s todo list and LogSync.sync's fresh-file diff.
-    val kept = tokKeepPaths(spark, root, column, norm)
-      .select(col("path")).as[String].collect()
-    val rowKeep = norm.map(t => array_contains(tokensOf(col(column)), t)).reduce(_ && _)
-    if (kept.isEmpty)
-      spark.read.option("basePath", root).parquet(root).filter(lit(false))
-    else {
-      // MOR deletes apply here too (see [[lookup]]); the read stays
-      // EXPLICIT-PATH (the token predicate can't push down, so the
-      // pruning lives in the path list), with the evolution fold on
-      // top when the lake has a schema log — grep by the renamed
-      // column must match pre-rename files
-      val evo = LakeEvolve.state(spark, root)
-      val entries = LogSync.deleteEntries(spark, root)
-      // generation-grouped explicit read (readPathsGrouped): a grep
-      // over a layout-flipped lake reads each generation's survivor
-      // files under its own shape, `_metadata` identities per group
-      val raw0 = LogSync.readPathsGrouped(spark, root, kept.toSeq,
-        r => evo match {
-          case Some(st) => r.schema(LakeEvolve.requestSchema(spark, root, st))
-          case None => r
-        },
-        df => {
-          val s = df.withColumn("__src",
-            LogSync.normPath(col("_metadata.file_path")))
-          if (entries.exists(!_.isEq))
-            s.withColumn("__pos", col("_metadata.row_index"))
-          else s
-        })
-      val raw = evo match {
-        case Some(st) => LakeEvolve.project(raw0, st)
-        case None => raw0
-      }
-      LogSync.applyDeletes(spark, raw, root, entries,
-          currentName = evo.map(st => (n: String) => st.currentName(n))
-            .getOrElse(identity[String] _))
-        .drop("__src").filter(rowKeep)
-    }
+    val paths = tokKeepPaths(spark, root, column, norm)
+      .select(LogSync.normPath(col("path")).as("__registered_path"))
+    LogSync.tableForPaths(spark, root, paths,
+        deletes = LogSync.deleteEntries(spark, root))
+      .filter(norm.map(t => array_contains(tokensOf(col(column)), t)).reduce(_ && _))
   }
 
   /** (files the grep would scan, total registered files). */

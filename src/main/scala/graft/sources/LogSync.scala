@@ -21,9 +21,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType, Timestam
   * (like the reference's `mc find`). The new-file diff is a distributed
   * anti-join against the manifest, and [[table]] reads the lake ROOT
   * (partition discovery + pruning intact) with the manifest applied as
-  * a broadcast semi-join pruning filter on `input_file_name()` — no
-  * million-element path vararg through the driver, no `collect()` on
-  * the data path.
+  * a file filter on the deterministic `_metadata.file_path` that the
+  * listing evaluates, so unregistered files are never opened — no
+  * million-element path vararg through the reader (past a row cap the
+  * filter becomes a shuffled semi-join and no path list crosses the
+  * driver), no `collect()` on the data path.
   */
 object LogSync {
 
@@ -942,8 +944,9 @@ object LogSync {
   private val BroadcastDeleteBytesCap = 64L * 1024 * 1024
 
   /** Row cap for broadcasting MANIFEST-cardinality relations (the
-    * per-file sequence attach, conversion candidate sets): one row
-    * per known file INCLUDING tombstones, so it grows with history
+    * per-file sequence attach, conversion candidate sets) and for
+    * resolving a read's keep-set on the driver ([[sizedKeepSet]]): one
+    * row per known file INCLUDING tombstones, so it grows with history
     * until vacuum — at a multi-million-file lake an unconditional
     * broadcast would pressure every executor and the driver. Under
     * the cap the attach broadcasts (a ~100-byte row per file; 1M rows
@@ -994,7 +997,7 @@ object LogSync {
     * dir costs a full scan job (~0.25 s of scheduler + footer latency
     * per read, measured). Iceberg/Delta hold exactly this metadata
     * driver-side; a LocalRelation additionally lets the keep-set
-    * semi-join broadcast without any scan job. Registries past
+    * resolve to a path list without any scan job. Registries past
     * [[registryDriverCacheMaxBytes]] keep the distributed path
     * unchanged (size-guarded, like every other control-plane
     * crossing). Rows are plain values, so entries are safely shared
@@ -1053,8 +1056,9 @@ object LogSync {
 
   /** TOTAL manifest row count (active + tombstoned) — an UPPER BOUND
     * on every manifest-derived relation's cardinality (keep-sets,
-    * seq-attach), used ONLY to pick broadcast vs shuffle. Both join
-    * strategies are row-identical, so a stale bound can cost a
+    * seq-attach), used ONLY to pick the driver-side shape (broadcast,
+    * or a static keep-set filter) vs shuffle. Both shapes are
+    * row-identical, so a stale bound can cost a
     * suboptimal plan, never a wrong row — which is what makes caching
     * it safe by construction. Cached per manifest-DIRECTORY LISTING
     * signature (version dir + part names/lengths/mtimes): a repeat
@@ -1090,24 +1094,49 @@ object LogSync {
     }
   }
 
-  /** The keep-set build side of the registered-path semi-join,
-    * size-guarded like every other manifest-cardinality relation: one
-    * row per kept file, so it grows with the lake — at ~10⁶ files an
-    * unconditional broadcast pins ~100+ MB of path strings on every
-    * executor for EVERY read (this is the primary read path — all of
-    * `table`/`tableAsOf`/`tableBetween`/`tableFor` flow through it).
-    * Under [[seqBroadcastRowCap]] the semi-join broadcasts; past it
-    * no hint — the join shuffles (AQE still free to broadcast a build
-    * side that turns out small). The bound is [[manifestRowCount]]:
-    * an upper bound on the filtered keep-set (conservative — a lake
-    * whose TOMBSTONES push the manifest over the cap falls to the
-    * shuffle shape early, and AQE recovers the broadcast at runtime),
-    * cached so the guard costs a listing, not a job per read.
+  /** `scan` (carrying `__src`, the normalized `_metadata.file_path`)
+    * restricted to the files of the one-column `__registered_path`
+    * keep-set `paths`, size-guarded like every other
+    * manifest-cardinality relation: one row per kept file, so it grows
+    * with the lake (this is the primary read path — all of
+    * `table`/`tableAsOf`/`tableBetween`/`tableFor`, the index reads,
+    * CDC, branches and the DML scan flow through it).
+    *
+    * Under [[seqBroadcastRowCap]] the keep-set resolves on the driver
+    * as a path list (over a [[servedRegistry]] manifest that is a local
+    * relation: no job) and applies as a static `__src IN (…)` filter.
+    * The filter is deterministic and references only
+    * `_metadata.file_path`, so Spark evaluates it in the file index's
+    * listing: files outside the keep-set are never opened. Past the
+    * cap the list must not cross the driver: a semi-join with no hint
+    * — it shuffles (AQE still free to broadcast a build side that
+    * turns out small). The bound is [[manifestRowCount]]: an upper
+    * bound on the filtered keep-set (conservative — a lake whose
+    * TOMBSTONES push the manifest over the cap falls to the shuffle
+    * shape early), cached so the guard costs a listing, not a job per
+    * read. Both shapes keep exactly the same rows.
     */
   private[sources] def sizedKeepSet(spark: SparkSession, root: String,
-                                    paths: DataFrame): DataFrame =
-    if (manifestRowCount(spark, root) <= seqBroadcastRowCap(spark)) broadcast(paths)
-    else paths
+                                    scan: DataFrame, paths: DataFrame): DataFrame =
+    if (manifestRowCount(spark, root) <= seqBroadcastRowCap(spark)) {
+      val keep = paths.select(col("__registered_path"))
+      val kept = driverRows(keep).getOrElse(keep.collect()).map(_.getString(0))
+      scan.filter(col("__src").isin(kept: _*))
+    } else scan.join(paths, col("__src") === col("__registered_path"), "left_semi")
+
+  /** The rows of `df` when its optimized plan is a driver-resident
+    * local relation (a [[servedRegistry]] read, filtered and
+    * projected, folds into one): read off the plan, with no job and no
+    * query execution; None when the plan would need one.
+    */
+  private[sources] def driverRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToScalaConverter(l.schema)
+        Some(l.data.map(toRow(_).asInstanceOf[Row]).toArray)
+      case _ => None
+    }
 
   /** Apply the row-level deletes in `entries` to a scan carrying
     * `__src` (normalized `_metadata.file_path`).
@@ -1209,7 +1238,7 @@ object LogSync {
   // count/registry caches already rely on: every registered mutation
   // (sync, DML tombstone, compaction swap, vacuum) rewrites the
   // manifest dir, changing the signature. Files present in a stale
-  // listing are only dropped ROW-wise by the keep-set semi-join, and
+  // listing are only dropped by the keep-set filter, and
   // files physically deleted are always tombstone-vacuumed through a
   // manifest rewrite first — so a cached listing can never serve rows
   // the current manifest doesn't register, nor point at paths vacuum
@@ -1461,7 +1490,7 @@ object LogSync {
     * concurrent syncs of one root would both pass the fresh-file
     * anti-join (each plans against the same manifest state) and
     * double-register every new path — benign for the read path's
-    * semi-join keep-set, but the eq-delete `seqRel` LEFT join would
+    * keep-set, but the eq-delete `seqRel` LEFT join would
     * then DUPLICATE the file's rows and [[tableSince]] would surface
     * it twice. The lease is a no-overwrite create carrying a
     * writer-unique token re-read after create (the schema-log commit
@@ -1897,7 +1926,7 @@ object LogSync {
     * a union), unioned by name with missing columns null — a column
     * that is a partition DIR in one generation and a DATA column in
     * another (DailyLayout's `hour`) coalesces into one output column
-    * by name. Everything downstream (keep-set semi-join, MOR deletes,
+    * by name. Everything downstream (keep-set filter, MOR deletes,
     * zone-map pruning) rides on top unchanged, and per-generation
     * partition pruning still reaches each scan. Once maintenance
     * rewrites the lake into one layout ([[LogCompact.compact]] keeps
@@ -1960,14 +1989,13 @@ object LogSync {
   /** The shared read shape: scan the lake ROOT (partition
     * discovery/pruning intact; underscore dirs skipped by the source)
     * with `paths` — a one-column `__registered_path` keep-set —
-    * applied as a semi-join on the scan's file identity (broadcast
-    * under [[seqBroadcastRowCap]] via [[sizedKeepSet]], shuffled past
-    * it), so non-kept files are invisible without any driver-side
-    * path list.
+    * applied to the scan's file identity by [[sizedKeepSet]]: a static
+    * file filter the listing evaluates under [[seqBroadcastRowCap]]
+    * (non-kept files are never opened), a shuffled semi-join past it.
     * The identity comes from the DETERMINISTIC `_metadata.file_path`
     * column — `input_file_name()` is nondeterministic, and a
     * nondeterministic projection blocks partition/predicate pushdown
-    * past it, un-pruning every reader.
+    * past it, un-pruning every reader (the file filter included).
     */
   private def keepOnly(spark: SparkSession, root: String, paths: DataFrame,
                        mergeSchema: Boolean = false,
@@ -2011,9 +2039,7 @@ object LogSync {
         else s
       },
       evolved = evo.isDefined)
-    val kept = scan
-      .join(sizedKeepSet(spark, root, paths),
-        col("__src") === col("__registered_path"), "left_semi")
+    val kept = sizedKeepSet(spark, root, scan, paths)
     // the alias fold runs BEFORE the delete anti-joins: an equality
     // delete committed after a rename binds the NEW name, and must
     // match pre-rename files' rows through the coalesce (their values
@@ -2374,7 +2400,7 @@ object LogSync {
   /** Registered rows with `timestamp` in `[fromIso, untilIso)`
     * (ISO dates, UTC), with FILE-LEVEL pruning from the manifest's
     * zone-map stats: files whose [min_ts, max_ts] cannot intersect the
-    * window never join the semi-join pruning set. This is data
+    * window never enter the scan's keep-set. This is data
     * skipping beyond directory partitioning — it works on
     * unpartitioned lakes and inside partitions (Iceberg manifest
     * min/max semantics); stat-less files (null min_ts) are kept, so
@@ -2435,7 +2461,7 @@ object LogSync {
 
   /** Registered rows for ONE service in a time window, file-pruned by
     * BOTH manifest zone maps (service min/max AND timestamp min/max)
-    * before the scan semi-join — the two-dimensional data-skipping
+    * before the scan opens them — the two-dimensional data-skipping
     * read. Row-level filters still apply on top (files can straddle
     * either boundary), so pruning is sound by construction: it only
     * ever removes files the row filter would empty anyway.
@@ -2521,7 +2547,7 @@ object LogSync {
   }
 
   /** Read a branch: the table exactly as pinned by [[branch]] —
-    * same root scan + broadcast semi-join as [[table]], keep-set from
+    * same keep-set read as [[table]], keep-set from
     * the branch manifest instead of the live one.
     */
   def tableBranch(spark: SparkSession, root: String, name: String): DataFrame = {

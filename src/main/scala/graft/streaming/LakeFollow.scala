@@ -35,7 +35,7 @@ import graft.sources.LogSync
   *
   * Scale shape: the poll is control-plane — one manifest read and one
   * anti-join on path; the data read is exactly the new files (cost ∝
-  * arrival rate, never lake size) through the same semi-join-pruned
+  * arrival rate, never lake size) through the same keep-set-pruned
   * scan as every manifest reader.
   *
   * BOUNDED OFFSETS: the consumed store does NOT grow with total

@@ -56,7 +56,7 @@ class LakeSpec extends SparkSpec {
     assert(q.collect().nonEmpty)
   }
 
-  test("LogSync: many-file lake syncs via anti-join; table plan is root-scan + semi-join") {
+  test("LogSync: many-file lake syncs via anti-join; table scan opens only registered files") {
     val root = Files.createTempDirectory("graft_manyfiles").toString
     // ~40 files per batch: enough to exercise the distributed diff
     Tables.events(spark, sf).limit(400)
@@ -68,17 +68,30 @@ class LakeSpec extends SparkSpec {
     assert(LogSync.sync(spark, root) == 0, "second sync must be a no-op")
     val t = LogSync.table(spark, root)
     assert(t.count() == 400)
-    val plan = planString(t)
-    assert(plan.contains("LeftSemi"),
-      s"table() must prune via a manifest semi-join, not a path vararg:\n$plan")
-    // unregistered files stay invisible until the next sync
+    // table() is ONE scan of the lake root, not a path vararg, and the
+    // manifest prunes it in the listing: it opens exactly the
+    // registered files
+    def registered() = LogSync.manifest(spark, root)
+      .filter(col("removed_at").isNull).count()
+    def assertRootScan(df: org.apache.spark.sql.DataFrame): Unit = {
+      val read = lakeFilesRead(df, root)
+      val scans = lakeScans(df, root)
+      assert(scans.size == 1 && scans.head.relation.location.rootPaths.map(_.toUri.getPath) ==
+        Seq(new org.apache.hadoop.fs.Path(root).toUri.getPath),
+        s"table() must read one root location:\n${planString(df)}")
+      assert(read == registered(), s"files read $read != registered ${registered()}")
+    }
+    assertRootScan(t)
+    // unregistered files stay invisible — and unopened — until the next sync
     Tables.events(spark, sf).limit(100)
       .select(col("ts").as("timestamp"), lit("s9").as("service_name"),
               col("props").as("body"))
       .write.mode("append").parquet(root)
     assert(LogSync.table(spark, root).count() == 400)
+    assertRootScan(LogSync.table(spark, root))
     assert(LogSync.sync(spark, root) >= 1)
     assert(LogSync.table(spark, root).count() == 500)
+    assertRootScan(LogSync.table(spark, root))
   }
 
   test("LogSync.runContinuously: rounds register increments idempotently") {
